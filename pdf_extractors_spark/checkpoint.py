@@ -57,16 +57,21 @@ def bucket_of(conv_id_col, n_buckets: int):
     return F.pmod(F.xxhash64(conv_id_col), F.lit(n_buckets)).cast("int")
 
 
-def _require_local(path: str) -> None:
+def _require_local(path: str) -> str:
+    """The local-filesystem path behind ``path`` (``file://`` stripped):
+    manifests, byte counts and bucket listings go through ``os``, which
+    would read a literal ``file:///x`` as the relative path ``file:/x``."""
     if "://" in path and not path.startswith("file://"):
         raise NotImplementedError(
             f"checkpoint manifests use local-filesystem atomic renames; "
             f"got {path!r}. On object storage / HDFS use Iceberg snapshot "
             f"commits instead (docs/SCALE.md §7)."
         )
+    return path.removeprefix("file://")
 
 
 def committed_buckets(out_path: str) -> dict[int, dict]:
+    out_path = _require_local(out_path)
     mdir = os.path.join(out_path, MANIFEST_DIR)
     if not os.path.isdir(mdir):
         return {}
@@ -98,7 +103,7 @@ def _validate_resume(
             raise ValueError(
                 f"resume with n_buckets={n_buckets} but bucket {k} was "
                 f"committed under n_buckets={nb} — this would duplicate "
-                f"and misplace rows; rerun with --buckets {nb} or a fresh "
+                f"and misplace rows; rerun with --n-buckets {nb} or a fresh "
                 f"output path"
             )
         snap = m.get("input_snapshot_id")
@@ -130,7 +135,7 @@ def run_with_checkpoint(
     buckets this run, then raise (simulates a killed job).
     Returns {"processed": [...], "skipped": [...]}.
     """
-    _require_local(out_path)
+    out_path = _require_local(out_path)
     os.makedirs(os.path.join(out_path, MANIFEST_DIR), exist_ok=True)
     done = committed_buckets(out_path)
     snapshot = input_snapshot_id or "unknown"
@@ -145,12 +150,10 @@ def run_with_checkpoint(
 
     run_id = uuid.uuid4().hex[:12]
     started = time.time()
-    src = transcripts.withColumn("bucket", bucket_of(F.col("conv_id"), n_buckets))
-    if skipped or fail_after is not None:
-        src = src.filter(F.col("bucket").isin(remaining))
-    extracted = pipeline.extract_transcripts(src).withColumn(
-        "bucket", bucket_of(F.col("conv_id"), n_buckets)
-    )
+    bucket = bucket_of(F.col("conv_id"), n_buckets)
+    if len(remaining) < n_buckets:
+        transcripts = transcripts.filter(bucket.isin(remaining))
+    extracted = pipeline.extract_transcripts(transcripts).withColumn("bucket", bucket)
     # dynamic overwrite replaces exactly the bucket dirs this run touches
     # — a half-written dir from a killed run is replaced, not appended to
     (
@@ -210,6 +213,7 @@ def read_extracted(spark: SparkSession, out_path: str) -> DataFrame:
     never reached its manifest is invisible, mirroring the resume path
     (uncommitted dirs would otherwise leak rows that disagree with
     ``metrics()``)."""
+    out_path = _require_local(out_path)
     done = committed_buckets(out_path)
     dirs = [
         os.path.join(out_path, f"bucket={k}")

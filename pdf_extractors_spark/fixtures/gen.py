@@ -62,24 +62,9 @@ def gen_pandas(n_convs: int, max_turns: int = 200) -> pd.DataFrame:
 def gen_spark(spark, n_convs: int, max_turns: int = 200, partitions: int | None = None):
     """Distributed generation: fan conv ids across executors."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
 
-    schema = StructType(
-        [
-            StructField("conv_id", StringType()),
-            StructField("turn_idx", IntegerType()),
-            StructField("role", StringType()),
-            StructField("text", StringType()),
-            StructField("tool", StringType()),
-            StructField("ts", TimestampType()),
-        ]
-    )
+    from ..pipeline import TRANSCRIPTS_SCHEMA
+
     partitions = partitions or max(8, int(spark.conf.get("spark.sql.shuffle.partitions")))
     ids = spark.range(n_convs).select(
         F.format_string("conv-%08d", F.col("id").cast("int")).alias("conv_id")
@@ -91,7 +76,9 @@ def gen_spark(spark, n_convs: int, max_turns: int = 200, partitions: int | None 
             for conv_id in pdf["conv_id"]:
                 yield turns_for_conv(conv_id, mt)
 
-    turns = ids.repartition(partitions, "conv_id").mapInPandas(build, schema=schema)
+    turns = ids.repartition(partitions, "conv_id").mapInPandas(
+        build, schema=TRANSCRIPTS_SCHEMA
+    )
     # rebalance at TURN granularity: partitioning by conv_id alone leaves
     # power-law-sized partitions (one 200-turn conversation ≫ eight
     # short ones), which skews downstream input splits; hashing on

@@ -5,7 +5,6 @@ bigint* — computable identically in Spark (``conv(substr(md5(x),1,8),16,10)``)
 DuckDB (``cast(concat('0x', substr(md5(x),1,8)) as bigint)``) and Python
 (``int(hashlib.md5(x).hexdigest()[:8], 16)``). Spark's native xxhash64 is
 faster but engine-private; correctness oracles need a cross-engine hash.
-The scale path can swap in xxhash64 behind the same API (``fast=True``).
 """
 
 from __future__ import annotations
@@ -15,10 +14,8 @@ import hashlib
 from pyspark.sql import Column, functions as F
 
 
-def md5_bigint(col: Column | str, fast: bool = False) -> Column:
+def md5_bigint(col: Column | str) -> Column:
     """32-bit-range bigint hash of a string column."""
-    if fast:
-        return F.xxhash64(col)
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
 
 
@@ -55,9 +52,9 @@ def affine_perms(k: int) -> list[tuple[int, int]]:
     ]
 
 
-def seeded(col: Column, seed: int, fast: bool = False) -> Column:
+def seeded(col: Column, seed: int) -> Column:
     """Seeded variant: hash of 'seed:value'."""
-    return md5_bigint(F.concat(F.lit(f"{seed}:"), col), fast=fast)
+    return md5_bigint(F.concat(F.lit(f"{seed}:"), col))
 
 
 def seeded_sql(expr: str, seed: int) -> str:

@@ -568,10 +568,9 @@ def hll_estimate(
     estimate.  The large-range (hash-collision) correction is
     DELIBERATELY omitted: with a 32-bit hash it matters past ~1.4·10^8
     distincts, where the portable-hash oracle contract itself breaks
-    down — at that scale swap ``hashing.md5_bigint(fast=True)``
-    (xxhash64, 64-bit) into hll_registers and the correction stays
-    irrelevant; the tradeoff is engine-private hashing, same as every
-    other ``fast=True`` site.  Relative error ≈ 1.04/√m (~6.5% at
+    down — at that scale a 64-bit hash (xxhash64) in hll_registers
+    keeps the correction irrelevant, at the cost of engine-private
+    hashing.  Relative error ≈ 1.04/√m (~6.5% at
     p=8) — pinned by a tolerance test against exact counts, while the
     DuckDB oracle replays the estimator bit-for-bit.
 

@@ -3,8 +3,7 @@
 Shape (SURVEY.md §3 "general pattern", re-expressed Spark-first)::
 
     scan (parquet/Iceberg, pruned) →
-    [optional salted repartition]  →
-    mapInPandas(extract_batch)     →  one narrow Arrow-batched stage
+    mapInArrow(extract_batch)      →  one narrow Arrow-batched stage
     sortWithinPartitions(conv_id, turn_idx) → write
 
 Zero per-row Python at the Spark level: the Python worker receives Arrow
@@ -20,9 +19,6 @@ provided as separate window/aggregate stages below, grouped by conv_id.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -31,9 +27,21 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 from .extractors import dispatch
+
+TRANSCRIPTS_SCHEMA = StructType(
+    [
+        StructField("conv_id", StringType()),
+        StructField("turn_idx", IntegerType()),
+        StructField("role", StringType()),
+        StructField("text", StringType()),
+        StructField("tool", StringType()),
+        StructField("ts", TimestampType()),
+    ]
+)
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -59,58 +67,22 @@ EXTRACTED_SCHEMA = StructType(
 )
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """The Arrow-batched extraction kernel. Runs once per Arrow batch
-    (≤ spark.sql.execution.arrow.maxRecordsPerBatch rows); per-document
-    loops only, no per-row Spark-side Python. Output assembled columnar
-    (lists per column), not as per-row dicts — measurably cheaper at
-    batch sizes in the thousands."""
-    from .extractors.dispatch import dumps_records as _dumps
-
-    for pdf in batches:
-        texts: list[str] = []
-        spans: list[list] = []
-        records: list[str] = []
-        errors: list[int] = []
-        for kind, payload in zip(pdf["tool"], pdf["text"]):
-            out = dispatch.extract_one(kind, payload)
-            texts.append(out["extracted_text"])
-            spans.append(out["spans"])
-            records.append(_dumps(out["records"]))
-            errors.append(out["parse_errors"])
-        yield pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].values,
-                "turn_idx": pdf["turn_idx"].values,
-                "kind": pdf["tool"].values,
-                "extracted_text": texts,
-                "spans": spans,
-                "records": records,
-                "parse_errors": errors,
-            }
-        )
-
-
 def _extract_batches_arrow(batches):
-    """Arrow-native variant of the extraction kernel (``mapInArrow``):
-    consumes/produces ``pyarrow.RecordBatch`` directly, skipping the
-    pandas materialization on both sides of the Python worker. The
-    pass-through columns (conv_id, turn_idx, tool) are reused zero-copy;
-    only the four computed columns are built, in C, via ``pa.array``."""
+    """The Arrow-batched extraction kernel (``mapInArrow``). Runs once per
+    Arrow batch (≤ spark.sql.execution.arrow.maxRecordsPerBatch rows);
+    per-document loops only, no per-row Spark-side Python, no pandas
+    materialization on either side of the Python worker. The pass-through
+    columns (conv_id, turn_idx, tool) are reused zero-copy; only the four
+    computed columns are built, in C, via ``pa.array`` — assembled as
+    lists per column, not per-row dicts, which is measurably cheaper at
+    batch sizes in the thousands. The Arrow output schema is derived from
+    ``EXTRACTED_SCHEMA``, the one declaration of the output format."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from .extractors.dispatch import dumps_records as _dumps
 
-    span_type = pa.list_(
-        pa.struct(
-            [
-                pa.field("label", pa.string()),
-                pa.field("start", pa.int32()),
-                pa.field("end", pa.int32()),
-                pa.field("value", pa.string()),
-            ]
-        )
-    )
+    schema = to_arrow_schema(EXTRACTED_SCHEMA)
     for batch in batches:
         tools = batch.column("tool").to_pylist()
         payloads = batch.column("text").to_pylist()
@@ -129,50 +101,32 @@ def _extract_batches_arrow(batches):
                 batch.column("conv_id"),
                 batch.column("turn_idx"),
                 batch.column("tool"),
-                pa.array(texts, pa.string()),
-                pa.array(spans, span_type),
-                pa.array(records, pa.string()),
-                pa.array(errors, pa.int32()),
+                pa.array(texts, schema.field("extracted_text").type),
+                pa.array(spans, schema.field("spans").type),
+                pa.array(records, schema.field("records").type),
+                pa.array(errors, schema.field("parse_errors").type),
             ],
-            names=[
-                "conv_id", "turn_idx", "kind", "extracted_text",
-                "spans", "records", "parse_errors",
-            ],
+            schema=schema,
         )
 
 
-def extract_transcripts(
-    transcripts: DataFrame,
-    repartition_to: int | None = None,
-    engine: str = "arrow",
-) -> DataFrame:
+def extract_transcripts(transcripts: DataFrame) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → extracted.
 
-    ``repartition_to``: explicit parallelism for the extraction stage.
-    Default: no shuffle at all — parquet/Iceberg split planning already
-    yields balanced input splits, and since extraction is per-turn there
-    is no key skew to correct (a long conversation is just more rows,
-    spread across splits). Salting (operators/salting.py) is only needed
-    for the conv-level stages below.
-
-    ``engine``: ``"arrow"`` (default — ``mapInArrow``, skips the pandas
-    round-trip in the Python worker) or ``"pandas"`` (``mapInPandas``).
-    Both run the identical extraction kernel and produce identical rows
-    (pinned by tests/test_pipeline.py).
+    No shuffle: parquet/Iceberg split planning already yields balanced
+    input splits, and since extraction is per-turn there is no key skew
+    to correct (a long conversation is just more rows, spread across
+    splits). Salting (operators/salting.py) is only needed for the
+    conv-level stages below.
     """
     # Manual column pruning: Catalyst cannot prune INTO an opaque
-    # mapInArrow/mapInPandas stage, so without this projection every
-    # input column (role, ts, ...) is Arrow-serialized into the Python
-    # worker and straight back out unused. Only the four columns the
-    # kernel reads cross the IPC boundary.
-    df = transcripts.select("conv_id", "turn_idx", "tool", "text")
-    if repartition_to:
-        # round-robin, not hash: the stage is stateless per turn, so we
-        # only want even card counts, never key co-location.
-        df = df.repartition(repartition_to)
-    if engine == "pandas":
-        return df.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
-    return df.mapInArrow(_extract_batches_arrow, schema=EXTRACTED_SCHEMA)
+    # mapInArrow stage, so without this projection every input column
+    # (role, ts, ...) is Arrow-serialized into the Python worker and
+    # straight back out unused. Only the four columns the kernel reads
+    # cross the IPC boundary.
+    return transcripts.select("conv_id", "turn_idx", "tool", "text").mapInArrow(
+        _extract_batches_arrow, schema=EXTRACTED_SCHEMA
+    )
 
 
 def quarantine_split(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:

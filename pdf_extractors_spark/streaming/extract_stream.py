@@ -3,7 +3,7 @@
 The reference is batch-only and the north rule is resumable batch, so
 streaming is not a required operator (SURVEY.md §2.8) — but the extraction
 stage is stateless per turn, which makes it trivially streamable: the same
-``mapInPandas`` kernel runs unchanged on a streaming DataFrame. This module
+``mapInArrow`` kernel runs unchanged on a streaming DataFrame. This module
 wires that up for incremental ingestion (new transcript files appearing in
 a directory → extracted parquet, exactly-once via checkpointLocation).
 
@@ -16,31 +16,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from .. import pipeline
-
-TRANSCRIPT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", IntegerType()),
-        StructField("role", StringType()),
-        StructField("text", StringType()),
-        StructField("tool", StringType()),
-        StructField("ts", TimestampType()),
-    ]
-)
 
 
 def read_transcript_stream(spark: SparkSession, input_dir: str, max_files_per_trigger: int = 16) -> DataFrame:
     return (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        spark.readStream.schema(pipeline.TRANSCRIPTS_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )

@@ -104,6 +104,16 @@ def test_fast_host_never_tightens():
     assert breaches == {} and advisory == {}
 
 
+def test_weather_is_true_median_for_even_suites():
+    # Two queries, one at baseline and one at 2x: the control is their
+    # mean (1.5), not the upper of the two middle ratios (2.0), which
+    # would divide every min by more and loosen each budget.
+    q1, q2 = sorted(bench.R3_MEDIANS)[:2]
+    timings = {q1: bench.R3_MEDIANS[q1], q2: bench.R3_MEDIANS[q2] * 2}
+    _, _, weather = bench.budget_check(timings, dict(timings))
+    assert weather == 1.5
+
+
 def test_every_budget_row_is_benched():
     stale = [
         k

@@ -129,3 +129,27 @@ def test_read_extracted_hides_uncommitted_buckets(spark, small_transcripts, tmp_
             spark, small_transcripts, "s3://bucket/out", n_buckets=4
         )
     shutil.rmtree(out)
+
+
+def test_file_uri_output_commits_real_manifests(
+    spark, small_transcripts, tmp_path, monkeypatch
+):
+    """A ``file://`` output URI names the same local directory as the bare
+    path: manifests, metrics and reads must see the written buckets, and
+    nothing may land under a literal ``file:`` directory in the cwd."""
+    import os
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    uri = (tmp_path / "out").as_uri()
+    assert uri.startswith("file:///")
+    n = small_transcripts.count()
+    res = checkpoint.run_with_checkpoint(spark, small_transcripts, uri, n_buckets=4)
+    assert res["processed"] == [0, 1, 2, 3]
+    assert checkpoint.metrics(uri)["rows"] == n
+    assert checkpoint.read_extracted(spark, uri).count() == n
+    assert os.listdir(cwd) == []
+    # the resume sees the commits instead of an empty manifest dir
+    again = checkpoint.run_with_checkpoint(spark, small_transcripts, uri, n_buckets=4)
+    assert again == {"processed": [], "skipped": [0, 1, 2, 3]}

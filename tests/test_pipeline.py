@@ -53,8 +53,8 @@ def test_spark_matches_oracle(spark, small_transcripts):
 
 def test_giant_payload_survives_arrow_batching(spark):
     """A multi-MB single turn must flow through the Arrow-batched stage
-    (both kernels) without OOM or truncation — the maxRecordsPerBatch
-    bound means payload size degrades to more batches, never failure."""
+    without OOM or truncation — the maxRecordsPerBatch bound means
+    payload size degrades to more batches, never failure."""
     big_html = (
         "<html><body><main><article>"
         + ("<p>" + ("Large block of body text. " * 200) + "</p>") * 400
@@ -67,13 +67,12 @@ def test_giant_payload_survives_arrow_batching(spark):
         rows,
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    for engine in ("arrow", "pandas"):
-        out = pipeline.extract_transcripts(probe, engine=engine).collect()
-        assert len(out) == 1
-        r = out[0]
-        assert r["parse_errors"] == 0
-        assert "Total amount without VAT" in r["extracted_text"]
-        assert all(s["label"] for s in r["spans"])
+    out = pipeline.extract_transcripts(probe).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert r["parse_errors"] == 0
+    assert "Total amount without VAT" in r["extracted_text"]
+    assert all(s["label"] for s in r["spans"])
 
 
 def test_quarantine_split(spark):
@@ -94,15 +93,6 @@ def test_quarantine_split(spark):
     assert g == {("c1", 0)}
     assert q == {("c1", 1), ("c2", 0)}
     assert ext.count() == len(g) + len(q)
-
-
-def test_arrow_and_pandas_kernels_identical(spark, small_transcripts):
-    """The mapInArrow and mapInPandas extraction kernels must produce
-    byte-identical rows — same dispatch, same schema, different Python
-    worker serialization only."""
-    arrow = _collect(pipeline.extract_transcripts(small_transcripts, engine="arrow"))
-    pandas = _collect(pipeline.extract_transcripts(small_transcripts, engine="pandas"))
-    assert arrow == pandas
 
 
 def test_partition_invariance(spark, small_transcripts):

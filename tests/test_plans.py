@@ -11,6 +11,7 @@ import io
 import re
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractors_spark import pipeline
@@ -66,11 +67,47 @@ def _parquet_transcripts(spark, small_transcripts, tmp_path):
     return spark.read.parquet(path)
 
 
-def test_extraction_stage_has_no_shuffle(spark, small_transcripts, tmp_path):
+def _assert_one_pruned_arrow_stage(plan: str) -> None:
+    """Exactly one MapInArrow, no MapInPandas, and a scan that reads only
+    the four columns the kernel uses (the manual projection in
+    ``extract_transcripts`` — Catalyst cannot prune into the stage)."""
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1, plan
+    assert "MapInPandas" not in plan, plan
+    read_schema = [l for l in plan.splitlines() if "ReadSchema" in l]
+    assert len(read_schema) == 1, plan
+    cols = set(re.findall(r"[<,](\w+):", read_schema[0]))
+    assert cols == {"conv_id", "turn_idx", "tool", "text"}, read_schema[0]
+
+
+def test_extraction_stage_has_no_shuffle(
+    spark, small_transcripts, tmp_path, monkeypatch
+):
+    from pdf_extractors_spark import checkpoint
+
     src = _parquet_transcripts(spark, small_transcripts, tmp_path)
     ext = pipeline.extract_transcripts(src)
     plan = _plan(ext)
-    assert "Exchange" not in plan  # narrow: scan → mapInPandas, nothing else
+    assert "Exchange" not in plan  # narrow: scan → mapInArrow, nothing else
+    _assert_one_pruned_arrow_stage(plan)
+
+    # the checkpointed run extracts through the same single stage, with
+    # the bucket filter below it
+    extract, built = pipeline.extract_transcripts, []
+
+    def _capture(df):
+        built.append(extract(df))
+        return built[-1]
+
+    monkeypatch.setattr(pipeline, "extract_transcripts", _capture)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        checkpoint.run_with_checkpoint(
+            spark, src, str(tmp_path / "ckpt"), n_buckets=4, fail_after=2
+        )
+    assert len(built) == 1
+    plan = _plan(built[0])
+    assert "Exchange" not in plan
+    assert "xxhash64(conv_id" in plan, plan
+    _assert_one_pruned_arrow_stage(plan)
 
 
 def test_scalar_ops_stay_in_codegen(spark, tmp_path):
